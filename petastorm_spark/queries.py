@@ -74,11 +74,8 @@ def _session_key(spark: SparkSession) -> tuple:
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from petastorm_spark.session import ensure_session_confs
 
-    # unconditional (r16 ADVICE): the expensive part being cached is the
-    # read.parquet resolution; the conf re-assert is a cheap get/set and
-    # must hold at EXECUTION time even if a driver mutated session confs
-    # after the handle was first cached (nanosAsLong/UTC are runtime-
-    # settable and a cache hit used to skip them)
+    # once per session (memoized on it), so a cache hit costs no JVM
+    # round trip; works on sessions the engine did not build
     ensure_session_confs(spark)
     key = (*_session_key(spark), sf_dir, name)
     df = _T_CACHE.get(key)

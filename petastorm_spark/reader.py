@@ -4,15 +4,27 @@ Parity surface: petastorm/reader.py:60-206 (make_reader), :209-352
 (make_batch_reader), :355-501 (Reader), sharding :573-597, piece-order
 shuffle :666-682, in-piece row shuffle (arrow_reader_worker.py:360-371).
 
-Architecture (two-tier, mirrors how the reference's converter works but
-with Spark doing the heavy lifting):
+Opening a reader needs no JVM for any URL pyarrow can reach, as in the
+reference: the files are listed and the metadata sidecar read through a
+pyarrow filesystem, and the schema is the stored Unischema or, without
+one, the one Spark would infer from the parquet footers (the same
+footers the open scans for row-group counts and DNF pruning). Spark
+runs at open only where it plans or materializes the data (a Column
+filter that does not compile to DNF, ``cache_dir`` over a remote store,
+``rowgroup_selector``, ``dataframe=`` readers) or infers what the files
+do not hold (hive partition columns without a sidecar,
+``schema_evolution`` merges).
 
-  1. **Plan tier (distributed)** — the dataset is a Spark DataFrame;
-     projection (schema view), filters, and any heavy transform run as
-     a Catalyst plan with parquet pushdown. Only a JVM-only ``Column``
-     filter (or a dataframe-based reader, or an explicit local cache
-     request for a remote store) forces a one-time Spark-side
-     materialization; everything else streams.
+Architecture (two tiers, mirroring how the reference's converter works
+but with Spark doing the heavy lifting):
+
+  1. **Plan tier (distributed)** — ``Reader.dataframe``, built on first
+     access: the dataset as a Spark DataFrame with the projection
+     (schema view) and filters as a Catalyst plan with parquet
+     pushdown. Only a JVM-only ``Column`` filter (or a dataframe-based
+     reader, or an explicit local cache request for a remote store)
+     forces a one-time Spark-side materialization; everything else
+     streams.
   2. **Iteration tier (streaming, constant memory)** — the source
      parquet files are iterated **one row group at a time** through a
      pyarrow FileSystem handle (local, s3://, gs://, hdfs:// — the
@@ -33,6 +45,7 @@ normal Spark job sized by the cluster.
 
 from __future__ import annotations
 
+import functools
 import glob
 import json
 import os
@@ -42,10 +55,31 @@ from urllib.parse import urlparse
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    BooleanType,
+    ByteType,
+    DataType,
+    DateType,
+    DecimalType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    MapType,
+    ShortType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 from petastorm_spark._piece_worker import (
     decode_col,
@@ -93,9 +127,7 @@ def _resolve_fs(url: str) -> tuple[pafs.FileSystem, str] | None:
 
 def _sidecar_via_pyarrow(pfs: pafs.FileSystem, root: str) -> dict | None:
     """The JSON sidecar payload read through a pyarrow filesystem, or
-    None when absent — the retry path that keeps a working JVM plan
-    tier when only the sidecar read hiccups, and the primary path for
-    JVM-unreachable schemes."""
+    None when absent."""
     side = root.rstrip("/") + "/" + SIDECAR_NAME
     if pfs.get_file_info([side])[0].type != pafs.FileType.File:
         return None
@@ -142,6 +174,98 @@ def _parallel_footers(fs: pafs.FileSystem, files: list[str], fn, workers: int = 
         return dict(ex.map(one, files))
 
 
+# Spark's signed/unsigned parquet INT(width) annotations; unsigned types
+# widen to the next signed type, and uint64 becomes decimal(20,0).
+_INT_TYPES = {
+    (8, True): ByteType(),
+    (16, True): ShortType(),
+    (32, True): IntegerType(),
+    (64, True): LongType(),
+    (8, False): ShortType(),
+    (16, False): IntegerType(),
+    (32, False): LongType(),
+    (64, False): DecimalType(20, 0),
+}
+# physical types that map to one Spark type when unannotated
+_PLAIN_TYPES = {
+    "BOOLEAN": BooleanType(),
+    "FLOAT": FloatType(),
+    "DOUBLE": DoubleType(),
+    "INT96": TimestampType(),
+}
+
+
+def _leaf_spark_type(col) -> DataType:
+    """The Spark type of one parquet leaf column, by the rules of
+    Spark's parquet schema converter under the engine's session
+    contract: TIMESTAMP(NANOS) reads as bigint (``nanosAsLong``),
+    TIMESTAMP with isAdjustedToUTC=false as timestamp_ntz
+    (``inferTimestampNTZ``, on by default), INT96 as timestamp."""
+    phys, logical = col.physical_type, col.logical_type
+    kind = logical.type
+    if kind == "DECIMAL":
+        return DecimalType(col.precision, col.scale)
+    if phys in _PLAIN_TYPES and kind == "NONE":
+        return _PLAIN_TYPES[phys]
+    if phys in ("INT32", "INT64"):
+        spec = json.loads(logical.to_json())
+        if kind == "NONE":
+            return IntegerType() if phys == "INT32" else LongType()
+        if kind == "DATE" and phys == "INT32":
+            return DateType()
+        if kind == "INT" and (spec["bitWidth"] <= 32) == (phys == "INT32"):
+            return _INT_TYPES[(spec["bitWidth"], spec["isSigned"])]
+        if kind == "TIMESTAMP" and phys == "INT64":
+            if spec["timeUnit"] == "nanoseconds":
+                return LongType()
+            return TimestampType() if spec["isAdjustedToUTC"] else TimestampNTZType()
+    if phys in ("BYTE_ARRAY", "FIXED_LEN_BYTE_ARRAY"):
+        if kind in ("NONE", "BSON"):
+            return BinaryType()
+        if kind in ("STRING", "ENUM", "JSON") and phys == "BYTE_ARRAY":
+            return StringType()
+    raise ValueError(
+        f"parquet column {col.path!r} ({phys} {logical}) has no Spark type"
+    )
+
+
+def _spark_struct(md: pq.FileMetaData) -> StructType:
+    """The schema ``spark.read.parquet`` infers from one footer: leaf
+    types from the parquet columns (:func:`_leaf_spark_type`), nesting
+    from the arrow view of the same schema, every field nullable (Spark
+    makes file-source schemas nullable at every level)."""
+    leaves = iter(md.schema.column(i) for i in range(md.num_columns))
+
+    def conv(t) -> DataType:
+        if pa.types.is_struct(t):
+            return StructType([StructField(f.name, conv(f.type), True) for f in t])
+        if pa.types.is_map(t):
+            return MapType(conv(t.key_type), conv(t.item_type), True)
+        if (
+            pa.types.is_list(t)
+            or pa.types.is_large_list(t)
+            or pa.types.is_fixed_size_list(t)
+        ):
+            return ArrayType(conv(t.value_type), True)
+        return _leaf_spark_type(next(leaves))
+
+    return conv(pa.struct(list(md.schema.to_arrow_schema())))
+
+
+def _jvm_reaches(spark: SparkSession, url: str) -> bool:
+    """True when the JVM has a Hadoop filesystem for ``url``'s scheme
+    (s3a:// without hadoop-aws on the driver classpath has none)."""
+    from py4j.protocol import Py4JError
+
+    from petastorm_spark.etl.dataset_metadata import _fs_and_path
+
+    try:
+        _fs_and_path(spark, url)
+    except Py4JError:  # the JVM's class or scheme lookup failed
+        return False
+    return True
+
+
 _WIDEN_CHAINS = (
     ("byte", "short", "integer", "long"),
     ("float", "double"),
@@ -164,7 +288,7 @@ def _widen_types(t1, t2):
     return None
 
 
-def _widened_union_schema(urls: list[str]):
+def _widened_union_schema(urls: list[str]) -> StructType:
     """Union schema of every parquet footer under ``urls`` with safe
     type widening: (first-seen column order, each column at its widest
     observed type, everything nullable). Raises ValueError on a
@@ -172,30 +296,18 @@ def _widened_union_schema(urls: list[str]):
     footer read per file (parallelized, metadata-sized) — only paid
     when Spark's own distributed footer merge refused the dataset, so
     the dataset is KNOWN to contain a type change."""
-    from pyspark.sql.pandas.types import from_arrow_schema
-    from pyspark.sql.types import StructField, StructType
-
     merged: dict = {}
-    order: list[str] = []
     for u in urls:
         pair = _resolve_fs(u)
         if pair is None:
             raise FileNotFoundError(f"cannot resolve a filesystem for {u!r}")
         pfs, root = pair
         leaves = _list_parquet_files_fs(pfs, root)
-        from concurrent.futures import ThreadPoolExecutor
-
-        def one(path, _pfs=pfs):
-            with _pfs.open_input_file(path) as fh:
-                return path, from_arrow_schema(pq.read_schema(fh))
-
-        with ThreadPoolExecutor(min(16, max(len(leaves), 1))) as ex:
-            footers = dict(ex.map(one, leaves))
+        footers = _parallel_footers(pfs, leaves, lambda p, md: _spark_struct(md))
         for path in leaves:
             for f in footers[path].fields:
                 if f.name not in merged:
                     merged[f.name] = f.dataType
-                    order.append(f.name)
                     continue
                 w = _widen_types(merged[f.name], f.dataType)
                 if w is None:
@@ -208,9 +320,7 @@ def _widened_union_schema(urls: list[str]):
                         "never converts across kinds"
                     )
                 merged[f.name] = w
-    return StructType(
-        [StructField(n, merged[n], True) for n in order]
-    )
+    return StructType([StructField(n, t, True) for n, t in merged.items()])
 
 
 def _dnf_to_column(filters) -> Column:
@@ -439,10 +549,12 @@ class Reader:
                 f"cur_shard must be in [0, {shard_count}), got {cur_shard}"
             )
 
-        self._spark = spark or (dataframe.sparkSession if dataframe is not None else get_spark())
-        from petastorm_spark.session import ensure_session_confs
-
-        ensure_session_confs(self._spark)
+        # The session is resolved on first use (see ``_spark``): opening
+        # a URL reader that pyarrow can reach needs no JVM at all.
+        self._session_arg = spark or (
+            dataframe.sparkSession if dataframe is not None else None
+        )
+        self._session: SparkSession | None = None
         self._seed = seed
         self._rng = np.random.default_rng(seed)
         # pool parity (petastorm reader_pool_type thread|process|dummy):
@@ -472,204 +584,164 @@ class Reader:
         self._sentinel: str | None = None
         self.last_row_consumed = False
 
-        # ---- plan tier -----------------------------------------------------
+        # ``filters`` accepts either a Spark Column (plan-tier only) or
+        # petastorm/pyarrow-style DNF tuples, which the iteration tier
+        # evaluates itself (stats pruning + row mask) on ANY filesystem
+        # without materializing. Simple comparison Columns compile to
+        # DNF too — a filters=Column reader over a 100 TB store must not
+        # materialize a filtered copy to driver-local disk.
+        self._dnf = filters if (filters is not None and is_dnf_filters(filters)) else None
+        col_filter: Column | None = (
+            filters if (filters is not None and self._dnf is None) else None
+        )
+        if col_filter is not None:
+            from petastorm_spark.plans.filter_compile import column_to_dnf
+
+            compiled = column_to_dnf(col_filter)
+            if compiled is not None:
+                self._dnf = compiled
+                col_filter = None
+        self._col_filter = col_filter
+
+        # ---- source: files, stored schema, Spark where it must ----------
+        # Direct iteration streams row groups straight from the source
+        # filesystem (local, file://, s3://, gs://, hdfs:// — anything
+        # pyarrow's FileSystem.from_uri reaches). Only a JVM-only Column
+        # filter, a scheme pyarrow cannot reach, an explicit local cache
+        # request for a remote store, or a dataframe-based reader forces
+        # a Spark-side materialization.
+        self._urls = urls
+        self._source_df: DataFrame | None = dataframe
+        self._selected_files: list[str] | None = None
         self._sidecar_counts: dict | None = None
-        # schema evolution: later-written files may ADD nullable
-        # columns (mergeSchema unions footers JVM-side; the iteration
-        # tier null-fills columns absent from an old file via
-        # partition_values missing_ok) or WIDEN a column along the safe
-        # chains int32->int64 / float->double (r13): Spark's merge
-        # refuses type changes, so a CANNOT_MERGE_SCHEMAS read retries
-        # under the explicit widened union schema — the parquet scan
-        # promotes per file — and the iteration tier's decode_series
-        # cast to the unified Unischema dtype widens per piece.
-        # Cross-kind changes (int<->float, string<->numeric, array
-        # element changes) still raise.
-        if dataframe is not None:
-            df = dataframe
-            stored = None
-        elif dataset_url is not None:
-            struct = None
-
-            def _jvm_read_single():
-                # scoped to the parquet read ONLY: a transient sidecar
-                # failure on a JVM-reachable dataset must not discard
-                # the working plan tier (round-11 advice)
-                try:
-                    return self._reader_with_merge().parquet(dataset_url)
-                except Exception as exc:
-                    # mergeSchema refuses type CHANGES outright; with
-                    # schema_evolution, safe widenings (int32->int64,
-                    # float->double) re-read under an explicit widened
-                    # union schema (Spark's scan promotes per file);
-                    # genuine conflicts raise ValueError from the union
-                    if self._schema_evolution and (
-                        "CANNOT_MERGE_SCHEMAS" in str(exc)
-                    ):
-                        st = _widened_union_schema([dataset_url])
-                        return self._spark.read.schema(st).parquet(
-                            dataset_url
-                        )
-                    raise
-
-            try:
-                df = _jvm_read_single()
-            except ValueError:
-                raise  # widening conflict — never a filesystem problem
-            except Exception:
-                # The JVM has no filesystem for this scheme (e.g. s3a://
-                # without hadoop-aws on the driver classpath). The DIRECT
-                # tier still reaches it through pyarrow's from_uri:
-                # derive the schema from a parquet footer, read the
-                # sidecar through the same pyarrow filesystem, and run
-                # plan-tier-less (self.dataframe stays None).
-                pair = _resolve_fs(dataset_url)
-                if pair is None:
-                    raise
-                pfs, root = pair
-                leaves = _list_parquet_files_fs(pfs, root)
+        self._fs: pafs.FileSystem = pafs.LocalFileSystem()
+        self._direct_root: str | None = None
+        fs_pairs = [_resolve_fs(u) for u in urls] if urls is not None else None
+        reachable = fs_pairs is not None and all(p is not None for p in fs_pairs)
+        self._files: list[str] = []
+        first_files: list[str] = []  # each URL's first file: its footer schema
+        hive = False
+        stored: Unischema | None = None
+        if reachable:
+            # one scheme -> one fs implementation; roots may be many
+            self._fs = fs_pairs[0][0]
+            self._direct_root = fs_pairs[0][1]
+            for u, (_, root) in zip(urls, fs_pairs):
+                leaves = _list_parquet_files_fs(self._fs, root)
                 if not leaves:
-                    raise
-                from pyspark.sql.pandas.types import from_arrow_schema
-
-                if self._schema_evolution:
-                    struct = _widened_union_schema([dataset_url])
-                else:
-                    with pfs.open_input_file(leaves[0]) as fh:
-                        struct = from_arrow_schema(pq.read_schema(fh))
-                df = None
-                payload = _sidecar_via_pyarrow(pfs, root)
-            else:
+                    raise FileNotFoundError(f"no parquet files under {u}")
+                first_files.append(leaves[0])
+                self._files.extend(leaves)
+                hive = hive or any(
+                    "=" in part
+                    for f in leaves
+                    for part in f[len(root):].strip("/").split("/")[:-1]
+                )
+            if len(urls) == 1:
                 try:
-                    payload = read_sidecar(self._spark, dataset_url)
-                except Exception:
-                    # keep the JVM DataFrame; retry just the sidecar
-                    # through pyarrow (None = sidecar genuinely absent).
-                    # The retry itself may also fail (fs error after
-                    # resolution succeeds) — a doubly-failing sidecar
-                    # must degrade to payload=None, never abort a
-                    # dataset whose parquet read succeeded.
-                    try:
-                        pair = _resolve_fs(dataset_url)
-                        payload = (
-                            _sidecar_via_pyarrow(*pair)
-                            if pair is not None
-                            else None
-                        )
-                    except Exception:
-                        payload = None
+                    payload = _sidecar_via_pyarrow(self._fs, self._direct_root)
+                except (OSError, ValueError):
+                    # an unreadable sidecar never aborts the open: the
+                    # footers still carry the schema
+                    payload = None
+                if payload is not None:
+                    stored = Unischema.from_json(payload["unischema"])
+                    self._sidecar_counts = payload.get("row_groups")
+                else:
+                    # interop: a dataset written by original petastorm
+                    # keeps its pickled Unischema + rowgroup counts in
+                    # _common_metadata — load them so tensor columns decode
+                    from petastorm_spark.etl.petastorm_compat import (
+                        load_petastorm_metadata,
+                    )
+
+                    stored, self._sidecar_counts = load_petastorm_metadata(urls[0])
+        elif urls is not None and len(urls) == 1:
+            payload = read_sidecar(self._spark, urls[0])
             if payload is not None:
                 stored = Unischema.from_json(payload["unischema"])
-                self._sidecar_counts = payload.get("row_groups")
-            else:
-                # interop: a dataset written by original petastorm keeps
-                # its pickled Unischema + rowgroup counts in
-                # _common_metadata — load them so tensor columns decode
-                from petastorm_spark.etl.petastorm_compat import (
-                    load_petastorm_metadata,
-                )
+        # Spark reads the source at open only where it infers what the
+        # files do not hold: hive partition columns (no stored schema),
+        # schema-evolution merges (later files ADD nullable columns, or
+        # WIDEN one along int32->int64 / float->double; the iteration
+        # tier null-fills and casts per piece), and schemes pyarrow
+        # cannot reach.
+        if urls is not None and stored is None and (
+            not reachable or hive or self._schema_evolution
+        ):
+            self._source_df = self._spark_read(urls)
 
-                stored, self._sidecar_counts = load_petastorm_metadata(dataset_url)
-        else:
-            # multi-URL: validate the shards agree on a schema (name ->
-            # type, order-insensitive) before merging; one footer-only
-            # read per URL, driver-side metadata cost only.
-            def _check(u, fields, first_fields):
-                if self._schema_evolution:
-                    # union of fields; same-name types may WIDEN along
-                    # the safe chains (int32->int64, float->double);
-                    # anything else conflicts and raises
-                    merged = dict(first_fields or {})
-                    for k, t in fields.items():
-                        if k in merged and merged[k] != t:
-                            w = _widen_types(merged[k], t)
-                            if w is None:
-                                raise ValueError(
-                                    f"dataset URL {u!r} column {k!r} type "
-                                    f"{t} conflicts with {merged[k]} from "
-                                    "an earlier URL; schema evolution "
-                                    "merges columns and widens "
-                                    "int->long / float->double, never "
-                                    "converts across kinds"
-                                )
-                            merged[k] = w
-                        else:
-                            merged[k] = t
-                    return merged
-                if first_fields is not None and fields != first_fields:
-                    raise ValueError(
-                        f"dataset URL {u!r} schema {sorted(fields)} is "
-                        f"incompatible with {urls[0]!r} "
-                        f"({sorted(first_fields)}); multi-URL datasets "
-                        "must share one schema"
-                    )
-                return fields
+        if rowgroup_selector is not None:
+            # Index selection happens on the SOURCE dataset before any
+            # materialization — the pruned file list feeds both the
+            # Spark plan and the direct iteration path.
+            if dataset_url is None:
+                raise ValueError("rowgroup_selector requires a dataset_url reader")
+            self._selected_files = sorted(
+                {
+                    _strip_scheme(f)
+                    for f in rowgroup_selector.select_files(self._spark, dataset_url)
+                }
+            )
+            if not self._selected_files:
+                raise ValueError("rowgroup_selector matched no files")
+            selected = set(self._selected_files)
+            self._files = [f for f in self._files if _strip_scheme(f) in selected]
 
-            struct = None
-            try:
-                first_fields = None
-                for u in urls:
-                    first_fields = _check(u, {
-                        f.name: f.dataType
-                        for f in self._spark.read.parquet(u).schema.fields
-                    }, first_fields)
-                try:
-                    df = self._reader_with_merge().parquet(*urls)
-                except Exception as exc:
-                    # widened types across (or within) URLs: mergeSchema
-                    # refuses the type change; re-read under the
-                    # explicit widened union schema (see single-URL path)
-                    if self._schema_evolution and (
-                        "CANNOT_MERGE_SCHEMAS" in str(exc)
-                    ):
-                        st = _widened_union_schema(urls)
-                        df = self._spark.read.schema(st).parquet(*urls)
-                    else:
-                        raise
-            except ValueError:
-                raise
-            except Exception:
-                # The JVM has no filesystem for this scheme (e.g. s3a://
-                # without hadoop-aws on the driver classpath). The DIRECT
-                # tier still reaches it through pyarrow's from_uri, so
-                # derive + validate the schema from parquet footers and
-                # run plan-tier-less (self.dataframe stays None; a
-                # JVM-only Column filter then raises below).
-                from pyspark.sql.pandas.types import from_arrow_schema
-
-                pairs = [_resolve_fs(u) for u in urls]
-                if any(p is None for p in pairs):
-                    raise
-                first_fields = None
-                struct = None
-                from pyspark.sql.types import StructField, StructType
-
-                for (pfs, root), u in zip(pairs, urls):
-                    leaves = _list_parquet_files_fs(pfs, root)
-                    if not leaves:
-                        raise FileNotFoundError(f"no parquet files under {u}")
-                    with pfs.open_input_file(leaves[0]) as fh:
-                        st = from_arrow_schema(pq.read_schema(fh))
-                    struct = struct or st
-                    first_fields = _check(
-                        u, {f.name: f.dataType for f in st.fields}, first_fields
-                    )
-                if self._schema_evolution and first_fields is not None:
-                    # union schema across URLs, evolved columns nullable
-                    # and widened columns at their WIDEST type (the
-                    # _check merge already applied the widening chains)
-                    struct = StructType(
-                        [
-                            StructField(k, t, True)
-                            for k, t in first_fields.items()
-                        ]
-                    )
-                df = None
-            stored = None  # petastorm sidecars are per-dataset: plain-store path
-
-        full_schema = stored or Unischema.from_spark_schema(
-            df.schema if df is not None else struct
+        direct = (
+            reachable
+            and col_filter is None
+            and (cache_dir is None or isinstance(self._fs, pafs.LocalFileSystem))
         )
+        if not direct:
+            self._direct_root = None
+
+        # ---- footers: schema, row-group counts, DNF pruning -------------
+        # One parallel scan serves all three, and only where needed:
+        # row-group counts come from the metadata sidecar when present
+        # (no footer opened at all — the reference's
+        # num_row_groups_per_file map, same idea). With DNF filters the
+        # scan also prunes row groups whose min/max statistics cannot
+        # match. The schema is read from each URL's first footer when
+        # neither a stored Unischema nor a Spark read supplies it.
+        schema_files = (
+            set(first_files) if stored is None and self._source_df is None else set()
+        )
+        counts = None if self._dnf is not None else self._rowgroup_counts_from_sidecar()
+        dnf = self._dnf if direct else None
+
+        def footer(path, md):
+            kept = None
+            if dnf is not None:
+                names = [md.schema.column(i).name for i in range(md.num_columns)]
+                kept = [
+                    rg
+                    for rg in range(md.num_row_groups)
+                    if rg_may_match(md.row_group(rg), names, dnf)
+                ]
+            struct = _spark_struct(md) if path in schema_files else None
+            return md.num_row_groups, kept, struct
+
+        scan = set(schema_files)
+        if direct and counts is None:
+            scan.update(self._files)
+        scanned = _parallel_footers(self._fs, sorted(scan), footer) if scan else {}
+        if stored is not None:
+            full_schema = stored
+        elif self._source_df is not None:
+            full_schema = Unischema.from_spark_schema(self._source_df.schema)
+        else:
+            structs = [scanned[f][2] for f in first_files]
+            want = {f.name: f.dataType for f in structs[0].fields}
+            for u, st in zip(urls[1:], structs[1:]):
+                got = {f.name: f.dataType for f in st.fields}
+                if got != want:
+                    raise ValueError(
+                        f"dataset URL {u!r} schema {sorted(got)} is "
+                        f"incompatible with {urls[0]!r} ({sorted(want)}); "
+                        "multi-URL datasets must share one schema"
+                    )
+            full_schema = Unischema.from_spark_schema(structs[0])
 
         # reference behavior: schema_fields may be an NGram spec — the
         # reader then yields {offset: namedtuple} window dicts
@@ -710,26 +782,7 @@ class Reader:
         # Final (post-transform) schema the consumer sees.
         self.schema = transform_schema(view, self._spec) if self._spec else view
 
-        # Columns needed from storage: view + predicate + DNF filter
-        # columns. ``filters`` accepts either a Spark Column (plan-tier
-        # only) or petastorm/pyarrow-style DNF tuples, which the
-        # iteration tier can evaluate itself (stats pruning + row mask)
-        # on ANY filesystem without materializing.
-        self._dnf = filters if (filters is not None and is_dnf_filters(filters)) else None
-        col_filter: Column | None = (
-            filters if (filters is not None and self._dnf is None) else None
-        )
-        if col_filter is not None:
-            # Compile simple comparison Columns to DNF tuples so the
-            # direct streaming tier (and rowgroup stats pruning) applies
-            # to them too — a filters=Column reader over a 100 TB store
-            # must not materialize a filtered copy to driver-local disk.
-            from petastorm_spark.plans.filter_compile import column_to_dnf
-
-            compiled = column_to_dnf(col_filter)
-            if compiled is not None:
-                self._dnf = compiled
-                col_filter = None
+        # Columns needed from storage: view + predicate + DNF filter columns.
         need = list(view.fields)
         if predicate is not None:
             need += [f for f in predicate.get_fields() if f not in need]
@@ -737,187 +790,23 @@ class Reader:
             need += [c for c in dnf_columns(self._dnf) if c not in need]
         self._read_columns = need
 
-        # Index selection happens on the SOURCE dataset before any
-        # materialization — the pruned file list feeds both the Spark
-        # plan and the direct iteration path.
-        selected_files: set[str] | None = None
-        if rowgroup_selector is not None:
-            if dataset_url is None:
-                raise ValueError("rowgroup_selector requires a dataset_url reader")
-            selected_files = {
-                _strip_scheme(f)
-                for f in rowgroup_selector.select_files(self._spark, dataset_url)
-            }
-            if not selected_files:
-                raise ValueError("rowgroup_selector matched no files")
-            # basePath keeps hive partition columns alive when reading
-            # leaf files directly
-            df = (
-                self._spark.read.option("basePath", dataset_url)
-                .parquet(*sorted(selected_files))
+        if not direct:
+            self._files = self._materialize(filters, cache_dir, cache_size_limit)
+            scanned = _parallel_footers(
+                self._fs, self._files, lambda p, md: (md.num_row_groups, None, None)
             )
-
-        if df is None:
-            # JVM-unreachable scheme (see the multi-URL footer fallback):
-            # the direct tier streams via pyarrow; there is no plan-tier
-            # DataFrame to filter, so a JVM-only Column filter cannot run
-            if col_filter is not None:
-                raise ValueError(
-                    "filters=<Column> needs the Spark plan tier, but the "
-                    "JVM has no filesystem for this URL scheme; pass "
-                    "pyarrow-style DNF tuples instead"
-                )
-            self.dataframe = None
-        else:
-            plan = df.select(*need) if set(need) != set(df.columns) else df
-            if self._dnf is not None:
-                plan = plan.filter(_dnf_to_column(self._dnf))
-            elif col_filter is not None:
-                plan = plan.filter(col_filter)
-            self.dataframe = plan
-
-        # Direct-iteration path: stream row groups straight from the
-        # source filesystem (local, file://, s3://, gs://, hdfs:// —
-        # anything pyarrow's FileSystem.from_uri reaches). Only a
-        # JVM-only Column filter, an exotic scheme, or an explicit
-        # local cache request for a remote store forces a Spark-side
-        # materialization.
-        self._fs: pafs.FileSystem = pafs.LocalFileSystem()
-        self._direct_root: str | None = None
-        fs_pairs = (
-            [_resolve_fs(u) for u in urls] if urls is not None else None
-        )
-        if (
-            fs_pairs is not None
-            and all(p is not None for p in fs_pairs)
-            and col_filter is None
-            and (cache_dir is None or isinstance(fs_pairs[0][0], pafs.LocalFileSystem))
-        ):
-            # one scheme -> one fs implementation; roots may be many
-            self._fs = fs_pairs[0][0]
-            self._direct_root = fs_pairs[0][1]
-            files = []
-            for _, root in fs_pairs:
-                files.extend(_list_parquet_files_fs(self._fs, root))
-            if selected_files is not None:
-                files = [f for f in files if _strip_scheme(f) in selected_files]
-            self._files = files
-            if len(fs_pairs) > 1:
-                # sidecar rowgroup counts are keyed relative to ONE
-                # root; a merged dataset always takes the footer scan
-                self._sidecar_counts = None
-        elif df is None:
-            # plan-tier-less remote reader (JVM-unreachable scheme) that
-            # also failed direct-tier eligibility: nothing can serve it
-            raise ValueError(
-                "the JVM has no filesystem for this URL scheme and the "
-                "direct pyarrow tier is unavailable (cache_dir over a "
-                "remote store, or an unresolvable URL); drop cache_dir "
-                "or use a scheme one of the tiers reaches"
-            )
-        elif cache_dir is not None:
-            # user-managed cache dir: materialize into a managed
-            # SUBDIRECTORY (an overwrite-write into the dir itself would
-            # wipe unrelated user files), keyed by a STABLE content
-            # descriptor — semanticHash() changes across JVM restarts
-            # (verified empirically), which would defeat cross-run
-            # reuse and grow the cache unboundedly. Descriptor: source
-            # url + projected columns + filter text; dataframe-based
-            # readers fall back to semanticHash (session-lifetime reuse
-            # only, documented).
-            import hashlib
-
-            if urls is not None:
-                desc = "|".join(
-                    ["|".join(urls), ",".join(sorted(need)), str(filters)]
-                )
-                key = hashlib.sha256(desc.encode()).hexdigest()[:12]
-            else:
-                key = f"sess{plan.semanticHash() & 0xFFFFFFFF:08x}"
-            managed = os.path.join(cache_dir, f"_ps_materialized_{key}")
-            existing = (
-                _list_parquet_files(managed) if os.path.isdir(managed) else []
-            )
-            if not existing:
-                plan.write.mode("overwrite").parquet(managed)
-                existing = _list_parquet_files(managed)
-            else:
-                os.utime(managed)  # refresh LRU rank on reuse
-            # pin against concurrent eviction while this Reader is alive
-            self._managed_cache = managed
-            import socket
-
-            self._sentinel = os.path.join(
-                managed, f".ps_inuse_{os.getpid()}@{socket.gethostname()}"
-            )
-            with open(self._sentinel, "w"):
-                pass
-            if cache_size_limit is not None:
-                _enforce_cache_limit(cache_dir, cache_size_limit, keep=managed)
-            self._files = existing
-        else:
-            if urls is not None and col_filter is not None:
-                # Residual JVM-only Column filter over a URL-addressed
-                # store: a silent driver-local tempdir write would not
-                # survive cluster mode (executors write where only the
-                # driver iterates) and copies the filtered scan to one
-                # machine's disk. Demand an explicit durable location.
-                raise ValueError(
-                    "filters=<Column> could not be compiled to DNF for "
-                    "direct streaming (only comparison/in/and/or/not "
-                    "over plain columns and primitive literals compile)."
-                    " Pass pyarrow-style DNF filter tuples, or an "
-                    "explicit cache_dir on a durable filesystem to "
-                    "materialize the filtered scan."
-                )
-            # dataframe-based reader: an arbitrary Spark plan has no
-            # source files to stream, so a materialization is inherent.
-            self._owned_cache = tempfile.mkdtemp(prefix="pstorm_cache_")
-            plan.write.mode("overwrite").parquet(self._owned_cache)
-            self._files = _list_parquet_files(self._owned_cache)
         if not self._files:
             raise ValueError(
                 f"no parquet files found for {urls or 'dataframe'}"
             )
 
         # ---- piece list (one per row group) --------------------------------
-        # Row-group counts come from the metadata sidecar when present
-        # (no footer opened at all — the reference's
-        # num_row_groups_per_file map, same idea); otherwise a PARALLEL
-        # footer scan, never a serial per-file driver loop. With DNF
-        # filters the footer scan also prunes row groups whose min/max
-        # statistics cannot match.
+        if counts is None:
+            counts = {f: scanned[f][0] for f in self._files}
+        unpruned_rgs = sum(counts[f] for f in self._files)
         self._pieces: list[tuple[str, int, int]] = []
-        if self._dnf is not None and self._direct_root is not None:
-            dnf = self._dnf
-            keep = _parallel_footers(
-                self._fs,
-                self._files,
-                lambda p, md: (
-                    md.num_row_groups,
-                    [
-                        rg
-                        for rg in range(md.num_row_groups)
-                        if rg_may_match(
-                            md.row_group(rg),
-                            [md.schema.column(i).name for i in range(md.num_columns)],
-                            dnf,
-                        )
-                    ],
-                ),
-            )
-            unpruned_rgs = sum(keep[f][0] for f in self._files)
-            rgs_per_file = {f: keep[f][1] for f in self._files}
-        else:
-            counts = self._rowgroup_counts_from_sidecar()
-            if counts is None:
-                counts = _parallel_footers(
-                    self._fs, self._files, lambda p, md: md.num_row_groups
-                )
-            unpruned_rgs = sum(counts[f] for f in self._files)
-            rgs_per_file = {f: range(counts[f]) for f in self._files}
         for f in self._files:
-            for rg in rgs_per_file[f]:
+            for rg in range(counts[f]) if dnf is None else scanned[f][1]:
                 for sl in range(self._drop_parts):
                     self._pieces.append((f, rg, sl))
         # Validate shard_count against the UNPRUNED piece count: a
@@ -931,6 +820,138 @@ class Reader:
                 "more/smaller row groups"
             )
         self._nt = self.schema.namedtuple_cls()
+
+    # ---- plan tier ---------------------------------------------------------
+
+    @property
+    def _spark(self) -> SparkSession:
+        """The Spark session, resolved and given the engine's session
+        contract on first use — a reader built without ``spark`` starts
+        no session until it needs Spark."""
+        if self._session is None:
+            from petastorm_spark.session import ensure_session_confs
+
+            self._session = ensure_session_confs(self._session_arg or get_spark())
+        return self._session
+
+    def _spark_read(self, urls: list[str]) -> DataFrame:
+        """Spark's read of the source URLs. With ``schema_evolution``
+        mergeSchema unions the footers; it refuses type CHANGES
+        outright, so safe widenings (int32->int64, float->double)
+        re-read under an explicit widened union schema (Spark's scan
+        promotes per file) and genuine conflicts raise ValueError from
+        the union."""
+        if not self._schema_evolution:
+            return self._spark.read.parquet(*urls)
+        try:
+            return self._spark.read.option("mergeSchema", "true").parquet(*urls)
+        except Exception as exc:
+            if "CANNOT_MERGE_SCHEMAS" not in str(exc):
+                raise
+            return self._spark.read.schema(_widened_union_schema(urls)).parquet(*urls)
+
+    @functools.cached_property
+    def dataframe(self) -> DataFrame | None:
+        """The plan tier: the source as a Spark DataFrame, projected to
+        the read columns and filtered — built on first access (Catalyst
+        pushes both into the parquet scan). None when the JVM has no
+        filesystem for the URL scheme; the iteration tier still streams
+        it through pyarrow."""
+        spark = self._spark
+        df = self._source_df
+        if df is None:
+            if not _jvm_reaches(spark, self._urls[0]):
+                return None
+            if self._selected_files is not None:
+                # basePath keeps hive partition columns alive when
+                # reading leaf files directly
+                df = spark.read.option("basePath", self._urls[0]).parquet(
+                    *self._selected_files
+                )
+            else:
+                df = self._spark_read(self._urls)
+        need = self._read_columns
+        plan = df.select(*need) if set(need) != set(df.columns) else df
+        if self._dnf is not None:
+            return plan.filter(_dnf_to_column(self._dnf))
+        if self._col_filter is not None:
+            return plan.filter(self._col_filter)
+        return plan
+
+    def _materialize(self, filters, cache_dir, cache_size_limit) -> list[str]:
+        """Write the plan tier to parquet and return the written files
+        (the source cannot be streamed directly, see ``__init__``)."""
+        if self._urls is not None and self._col_filter is not None and cache_dir is None:
+            # Residual JVM-only Column filter over a URL-addressed
+            # store: a silent driver-local tempdir write would not
+            # survive cluster mode (executors write where only the
+            # driver iterates) and copies the filtered scan to one
+            # machine's disk. Demand an explicit durable location.
+            raise ValueError(
+                "filters=<Column> could not be compiled to DNF for "
+                "direct streaming (only comparison/in/and/or/not "
+                "over plain columns and primitive literals compile)."
+                " Pass pyarrow-style DNF filter tuples, or an "
+                "explicit cache_dir on a durable filesystem to "
+                "materialize the filtered scan."
+            )
+        self._fs = pafs.LocalFileSystem()
+        if cache_dir is None:
+            # dataframe-based reader: an arbitrary Spark plan has no
+            # source files to stream, so a materialization is inherent.
+            self._owned_cache = tempfile.mkdtemp(prefix="pstorm_cache_")
+            self._require_plan().write.mode("overwrite").parquet(self._owned_cache)
+            return _list_parquet_files(self._owned_cache)
+        # user-managed cache dir: materialize into a managed
+        # SUBDIRECTORY (an overwrite-write into the dir itself would
+        # wipe unrelated user files), keyed by a STABLE content
+        # descriptor — semanticHash() changes across JVM restarts
+        # (verified empirically), which would defeat cross-run reuse
+        # and grow the cache unboundedly. Descriptor: source url +
+        # projected columns + filter text; dataframe-based readers fall
+        # back to semanticHash (session-lifetime reuse only, documented).
+        import hashlib
+        import socket
+
+        if self._urls is not None:
+            desc = "|".join(
+                [
+                    "|".join(self._urls),
+                    ",".join(sorted(self._read_columns)),
+                    str(filters),
+                ]
+            )
+            key = hashlib.sha256(desc.encode()).hexdigest()[:12]
+        else:
+            key = f"sess{self._require_plan().semanticHash() & 0xFFFFFFFF:08x}"
+        managed = os.path.join(cache_dir, f"_ps_materialized_{key}")
+        existing = _list_parquet_files(managed) if os.path.isdir(managed) else []
+        if not existing:
+            self._require_plan().write.mode("overwrite").parquet(managed)
+            existing = _list_parquet_files(managed)
+        else:
+            os.utime(managed)  # refresh LRU rank on reuse
+        # pin against concurrent eviction while this Reader is alive
+        self._managed_cache = managed
+        self._sentinel = os.path.join(
+            managed, f".ps_inuse_{os.getpid()}@{socket.gethostname()}"
+        )
+        with open(self._sentinel, "w"):
+            pass
+        if cache_size_limit is not None:
+            _enforce_cache_limit(cache_dir, cache_size_limit, keep=managed)
+        return existing
+
+    def _require_plan(self) -> DataFrame:
+        plan = self.dataframe
+        if plan is None:
+            raise ValueError(
+                "the JVM has no filesystem for this URL scheme and the "
+                "direct pyarrow tier is unavailable (filters=<Column>, or "
+                "cache_dir over a remote store); pass pyarrow-style DNF "
+                "filter tuples and drop cache_dir"
+            )
+        return plan
 
     # ---- iteration tier ----------------------------------------------------
 
@@ -1087,10 +1108,6 @@ class Reader:
         if self._shuffle_rows and len(pdf) > 1:
             pdf = pdf.iloc[rng.permutation(len(pdf))].reset_index(drop=True)
         return pdf
-
-    def _reader_with_merge(self):
-        r = self._spark.read
-        return r.option("mergeSchema", "true") if self._schema_evolution else r
 
     def _proc_task(self, path: str, rg: int, sl: int) -> tuple:
         return (

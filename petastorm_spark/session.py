@@ -32,6 +32,34 @@ def _shuffle_partitions(cpus: int) -> int:
     return int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(cpus)))
 
 
+def _memory_limit_bytes() -> int:
+    """The memory this process may use: the cgroup limit (v2
+    ``memory.max`` or v1 ``memory.limit_in_bytes``) when one is set
+    below physical memory, else physical memory."""
+    limit = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in (
+        "/sys/fs/cgroup/memory.max",
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+    ):
+        try:
+            with open(path) as fh:
+                raw = fh.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            limit = min(limit, int(raw))
+    return limit
+
+
+def default_driver_memory(limit_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` sized from the machine: half of the
+    memory limit (the rest holds the Python driver, pyspark workers and
+    the JVM's off-heap), at least 1 GiB and at most 48 GiB."""
+    limit = _memory_limit_bytes() if limit_bytes is None else limit_bytes
+    mib = limit // (2 * 1024 * 1024)
+    return f"{max(1024, min(48 * 1024, mib))}m"
+
+
 def get_spark(app_name: str = "petastorm_spark", cpus: int | None = None) -> SparkSession:
     cpus = cpus or DEFAULT_CPUS
     builder = (
@@ -52,7 +80,10 @@ def get_spark(app_name: str = "petastorm_spark", cpus: int | None = None) -> Spa
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # testdata events.parquet stores TIMESTAMP(NANOS); Spark has no
@@ -95,45 +126,48 @@ def get_spark(app_name: str = "petastorm_spark", cpus: int | None = None) -> Spa
     return spark
 
 
+# The runtime-settable confs this engine depends on; static confs (such
+# as spark.python.sql.dataFrameDebugging.enabled) belong in get_spark's
+# builder, because a live session refuses them.
+SESSION_CONFS = {
+    # Without nanosAsLong, reading the TIMESTAMP(NANOS) events table
+    # throws PARQUET_TYPE_ILLEGAL (the Reader's footer schema assumes it
+    # too: TIMESTAMP(NANOS) columns are bigint).
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # non-UTC session time would shift timestamp comparisons against
+    # the TZ-naive oracle
+    "spark.sql.session.timeZone": "UTC",
+    # Subset co-partitioning (the pre-3.3 behavior): a child already
+    # hashpartitioned on a SUBSET of the join keys joins in place.
+    # Several self-join operators are designed around this — e.g.
+    # embedding_near_dup_pairs partitions on `bucket` once (window
+    # + both join sides share the exchange) and joins on (bucket,
+    # refine-subkey); with the default `true`, the planner inserts
+    # a fresh (bucket, _sub) exchange per side and the shared-scan
+    # design degrades to two full corpus evaluations.
+    "spark.sql.requireAllClusterKeysForCoPartition": "false",
+}
+
+
 def ensure_session_confs(spark: SparkSession) -> SparkSession:
-    """Apply the runtime-settable confs this engine depends on to an
-    EXTERNALLY-created session (e.g. the verification driver's).
-    Without nanosAsLong, reading the TIMESTAMP(NANOS) events table
-    throws PARQUET_TYPE_ILLEGAL; non-UTC session time would shift
-    timestamp comparisons against the TZ-naive oracle.
+    """Apply :data:`SESSION_CONFS` to a session, including one the
+    engine did not build (e.g. an application's own).
+
+    Runs once per session: the first call sets each key that differs
+    and that ``spark.conf.isModifiable`` reports runtime-settable, and
+    marks the session; later calls cost no JVM round trip. A caller
+    that changes one of these confs afterwards owns the consequences.
 
     NB this intentionally MUTATES the caller's session (the settings
     must hold at execution time, which may be long after plan
-    construction) — documented side effect, set only when differing to
-    avoid repeated JVM round trips.
+    construction).
     """
-    want = {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.session.timeZone": "UTC",
-        # Subset co-partitioning (the pre-3.3 behavior): a child already
-        # hashpartitioned on a SUBSET of the join keys joins in place.
-        # Several self-join operators are designed around this — e.g.
-        # embedding_near_dup_pairs partitions on `bucket` once (window
-        # + both join sides share the exchange) and joins on (bucket,
-        # refine-subkey); with the default `true`, the planner inserts
-        # a fresh (bucket, _sub) exchange per side and the shared-scan
-        # design degrades to two full corpus evaluations.
-        "spark.sql.requireAllClusterKeysForCoPartition": "false",
-        # Construction-cost switch (see get_spark): only effective if
-        # set before the process's first wrapped pyspark call — for an
-        # external driver session that means this first _t() touch.
-        # Harmless later (the python-side cache is already frozen).
-        "spark.python.sql.dataFrameDebugging.enabled": os.environ.get(
-            "SPARK_GRAFT_DF_DEBUG", "false"
-        ),
-    }
-    for k, v in want.items():
-        try:
-            current = spark.conf.get(k)
-        except Exception:  # noqa: BLE001 - unset conf
-            current = None
-        if current != v:
+    if getattr(spark, "_petastorm_spark_confs", False):
+        return spark
+    for k, v in SESSION_CONFS.items():
+        if spark.conf.get(k, None) != v and spark.conf.isModifiable(k):
             spark.conf.set(k, v)
+    spark._petastorm_spark_confs = True
     return spark
 
 

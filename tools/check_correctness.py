@@ -5,6 +5,13 @@ column names, and (order-insensitive) values.
 Usage:
     python tools/check_correctness.py [query ...]     # all (or named)
     python tools/check_correctness.py --stale [N]     # staleness sweep
+    python tools/check_correctness.py --external-session [...]
+
+``--external-session`` runs the queries on a plain
+``SparkSession.builder`` session instead of ``get_spark``'s, as an
+application that builds its own session would, so the sweep also
+exercises the engine's session contract (``ensure_session_confs``) on
+a session it did not build. It combines with either form above.
 
 ``--stale`` selects exactly the queries whose last fully-green DRIVER
 row (CORRECTNESS_r*.json) is N or more rounds old (default 3) or that
@@ -74,11 +81,21 @@ def main() -> None:
     from petastorm_spark.session import get_spark
     import __spark_entry__ as entrymod
 
-    spark = get_spark("correctness_check")
+    args = sys.argv[1:]
+    if "--external-session" in args:
+        args.remove("--external-session")
+        from pyspark.sql import SparkSession
+
+        spark = (
+            SparkSession.builder.master(f"local[{os.cpu_count() or 1}]")
+            .appName("correctness_check_external")
+            .getOrCreate()
+        )
+    else:
+        spark = get_spark("correctness_check")
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
 
-    args = sys.argv[1:]
     sweep_mode = False
     if args and args[0] == "--stale":
         sweep_mode = True
