@@ -200,7 +200,8 @@ def _leaf_spark_type(col) -> DataType:
     Spark's parquet schema converter under the engine's session
     contract: TIMESTAMP(NANOS) reads as bigint (``nanosAsLong``),
     TIMESTAMP with isAdjustedToUTC=false as timestamp_ntz
-    (``inferTimestampNTZ``, on by default), INT96 as timestamp."""
+    (``inferTimestampNTZ``), unannotated binary as binary, INT96 as
+    timestamp — all pinned by ``session.SESSION_CONFS``."""
     phys, logical = col.physical_type, col.logical_type
     kind = logical.type
     if kind == "DECIMAL":
@@ -665,11 +666,13 @@ class Reader:
         # schema-evolution merges (later files ADD nullable columns, or
         # WIDEN one along int32->int64 / float->double; the iteration
         # tier null-fills and casts per piece), and schemes pyarrow
-        # cannot reach.
-        if urls is not None and stored is None and (
-            not reachable or hive or self._schema_evolution
-        ):
-            self._source_df = self._spark_read(urls)
+        # cannot reach. It reads after the footer scan below, so that
+        # multi-URL schemas are compared first.
+        spark_source = (
+            urls is not None
+            and stored is None
+            and (not reachable or hive or self._schema_evolution)
+        )
 
         if rowgroup_selector is not None:
             # Index selection happens on the SOURCE dataset before any
@@ -703,9 +706,16 @@ class Reader:
         # num_row_groups_per_file map, same idea). With DNF filters the
         # scan also prunes row groups whose min/max statistics cannot
         # match. The schema is read from each URL's first footer when
-        # neither a stored Unischema nor a Spark read supplies it.
+        # neither a stored Unischema nor a Spark read supplies it; a
+        # multi-URL set compares those footers even when Spark reads it
+        # (schema evolution merges the URLs instead).
+        check_urls = (
+            urls is not None and len(urls) > 1 and not self._schema_evolution
+        )
         schema_files = (
-            set(first_files) if stored is None and self._source_df is None else set()
+            set(first_files)
+            if stored is None and (not spark_source or check_urls)
+            else set()
         )
         counts = None if self._dnf is not None else self._rowgroup_counts_from_sidecar()
         dnf = self._dnf if direct else None
@@ -726,12 +736,8 @@ class Reader:
         if direct and counts is None:
             scan.update(self._files)
         scanned = _parallel_footers(self._fs, sorted(scan), footer) if scan else {}
-        if stored is not None:
-            full_schema = stored
-        elif self._source_df is not None:
-            full_schema = Unischema.from_spark_schema(self._source_df.schema)
-        else:
-            structs = [scanned[f][2] for f in first_files]
+        structs = [scanned[f][2] for f in first_files if f in schema_files]
+        if structs:
             want = {f.name: f.dataType for f in structs[0].fields}
             for u, st in zip(urls[1:], structs[1:]):
                 got = {f.name: f.dataType for f in st.fields}
@@ -741,6 +747,21 @@ class Reader:
                         f"incompatible with {urls[0]!r} ({sorted(want)}); "
                         "multi-URL datasets must share one schema"
                     )
+        if spark_source and hive and len(urls) > 1:
+            # Spark reads several hive roots only one at a time
+            self._source_df = functools.reduce(
+                lambda a, b: a.unionByName(
+                    b, allowMissingColumns=self._schema_evolution
+                ),
+                [self._spark_read([u]) for u in urls],
+            )
+        elif spark_source:
+            self._source_df = self._spark_read(urls)
+        if stored is not None:
+            full_schema = stored
+        elif self._source_df is not None:
+            full_schema = Unischema.from_spark_schema(self._source_df.schema)
+        else:
             full_schema = Unischema.from_spark_schema(structs[0])
 
         # reference behavior: schema_fields may be an NGram spec — the
@@ -859,17 +880,19 @@ class Reader:
         it through pyarrow."""
         spark = self._spark
         df = self._source_df
-        if df is None:
-            if not _jvm_reaches(spark, self._urls[0]):
-                return None
-            if self._selected_files is not None:
-                # basePath keeps hive partition columns alive when
-                # reading leaf files directly
-                df = spark.read.option("basePath", self._urls[0]).parquet(
-                    *self._selected_files
-                )
-            else:
-                df = self._spark_read(self._urls)
+        if df is None and not _jvm_reaches(spark, self._urls[0]):
+            return None
+        if self._selected_files is not None:
+            # only the selected files; basePath keeps hive partition
+            # columns alive when reading leaf files directly, and the
+            # source read's schema (a merge, or hive columns) holds
+            # for them too
+            r = spark.read.option("basePath", self._urls[0])
+            if df is not None:
+                r = r.schema(df.schema)
+            df = r.parquet(*self._selected_files)
+        elif df is None:
+            df = self._spark_read(self._urls)
         need = self._read_columns
         plan = df.select(*need) if set(need) != set(df.columns) else df
         if self._dnf is not None:
@@ -920,6 +943,7 @@ class Reader:
                     ",".join(sorted(self._read_columns)),
                     str(filters),
                 ]
+                + (self._selected_files or [])
             )
             key = hashlib.sha256(desc.encode()).hexdigest()[:12]
         else:

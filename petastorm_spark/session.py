@@ -134,6 +134,13 @@ SESSION_CONFS = {
     # throws PARQUET_TYPE_ILLEGAL (the Reader's footer schema assumes it
     # too: TIMESTAMP(NANOS) columns are bigint).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # The rest of the parquet type rules the Reader's footer schema
+    # assumes (Spark's defaults, pinned so an application session that
+    # changes one still reads the types the Reader reports): unadjusted
+    # timestamps as timestamp_ntz, binary as binary, INT96 as timestamp.
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "true",
+    "spark.sql.parquet.binaryAsString": "false",
+    "spark.sql.parquet.int96AsTimestamp": "true",
     # non-UTC session time would shift timestamp comparisons against
     # the TZ-naive oracle
     "spark.sql.session.timeZone": "UTC",

@@ -190,9 +190,10 @@ def test_open_and_iterate_without_spark_read(spark, tmp_path, monkeypatch):
         )
 
     def boom(self):
-        raise AssertionError("the open must not read through Spark")
+        raise AssertionError("the open must not reach the JVM")
 
-    monkeypatch.setattr(SparkSession, "read", property(boom))
+    for attr in ("read", "sparkContext", "conf"):
+        monkeypatch.setattr(SparkSession, attr, property(boom))
     readers = [
         make_reader(side, spark=spark),
         make_batch_reader(plain[0], spark=spark, filters=[("id", ">=", 3)]),
@@ -202,12 +203,87 @@ def test_open_and_iterate_without_spark_read(spark, tmp_path, monkeypatch):
     assert side_rows == [(i, [float(i)] * 3) for i in range(12)]
     ids = [sorted(int(i) for b in r for i in b.id) for r in readers[1:]]
     assert ids == [list(range(3, 10)), list(range(20))]
+    # the session is resolved only for the plan tier
+    assert [r._session for r in readers] == [None, None, None]
 
     monkeypatch.undo()
     counts = [r.dataframe.count() for r in readers]
     assert counts == [12, 7, 20]
     for r in readers:
         r.close()
+
+
+def test_selector_holds_for_spark_read_sources(spark, tmp_path):
+    """A rowgroup selector limits both tiers also when Spark reads the
+    source at open (here ``schema_evolution=True``): the plan covers only
+    the selected files, on the direct path and on the materialized one
+    (a Column filter that does not compile, with ``cache_dir``)."""
+    from pyspark.sql import functions as F
+
+    from petastorm_spark.etl.rowgroup_indexing import (
+        SingleFieldIndexer,
+        SingleIndexSelector,
+        build_rowgroup_index,
+    )
+
+    url = str(tmp_path / "store")
+    spark.range(100).select(
+        "id", (F.col("id") % 5).alias("b")
+    ).repartition(5, "b").write.parquet(url)
+    build_rowgroup_index(spark, url, [SingleFieldIndexer("by_b", "b")])
+    def ids_in(sel):
+        return sorted(
+            i
+            for f in sel.select_files(spark, url)
+            for i in pq.read_table(f.removeprefix("file:"))["id"].to_pylist()
+        )
+
+    sel = SingleIndexSelector("by_b", [2])
+    selected = ids_in(sel)
+    assert 0 < len(selected) < 100
+
+    with make_reader(
+        url, spark=spark, rowgroup_selector=sel, schema_evolution=True
+    ) as r:
+        assert sorted(x.id for x in r) == selected
+        assert sorted(x.id for x in r.dataframe.collect()) == selected
+
+    # the materialized copy is keyed by the selection too: a second
+    # selector over the same cache_dir gets its own copy
+    for sel in (sel, SingleIndexSelector("by_b", [3])):
+        with make_reader(
+            url,
+            spark=spark,
+            rowgroup_selector=sel,
+            schema_evolution=True,
+            filters=F.col("id") % 2 == 0,
+            cache_dir=str(tmp_path / "cache"),
+        ) as r:
+            assert r._direct_root is None  # the materialized path
+            assert sorted(x.id for x in r) == [i for i in ids_in(sel) if i % 2 == 0]
+
+
+def test_multi_url_hive_stores(spark, tmp_path):
+    """Multi-URL hive stores, which Spark reads at open for their
+    partition columns, have their footer schemas compared first; stores
+    that agree are read one root at a time and yield their partition
+    columns on both tiers."""
+    urls = [str(tmp_path / n) for n in "abc"]
+    for k, (url, col) in enumerate(zip(urls, "xxy")):
+        os.makedirs(f"{url}/p={k}")
+        pq.write_table(
+            pa.table({"id": pa.array([2 * k, 2 * k + 1], pa.int64()), col: [0.5, 1.5]}),
+            f"{url}/p={k}/part-0.parquet",
+        )
+    with pytest.raises(ValueError, match="must share one schema"):
+        make_batch_reader(urls, spark=spark)
+    with make_batch_reader(urls[:2], spark=spark) as r:
+        assert sorted(r.schema.fields) == ["id", "p", "x"]
+        rows = sorted(
+            (int(i), int(p)) for b in r for i, p in zip(b.id, b.p)
+        )
+        assert rows == [(0, 0), (1, 0), (2, 1), (3, 1)]
+        assert sorted(tuple(x) for x in r.dataframe.select("id", "p").collect()) == rows
 
 
 def test_session_confs_applied_once(spark, monkeypatch):
@@ -248,6 +324,7 @@ _EXTERNAL = textwrap.dedent(
     import sys
 
     sys.path.insert(0, sys.argv[1])
+    import numpy as np
     from pyspark.sql import SparkSession
 
     from petastorm_spark.queries import _t
@@ -259,6 +336,7 @@ _EXTERNAL = textwrap.dedent(
         SparkSession.builder.master("local[2]")
         .appName("external_session")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.parquet.binaryAsString", "true")
         .getOrCreate()
     )
     with make_reader(url, spark=spark) as r:
@@ -266,6 +344,10 @@ _EXTERNAL = textwrap.dedent(
     with make_batch_reader(url, spark=spark) as r:
         batched = sum(len(b.id) for b in r)
         planned = r.dataframe.count()
+        # the session contract pins the parquet type rules the footer
+        # schema assumes, so both tiers agree on binary columns
+        assert r.dataframe.schema["b"].dataType.simpleString() == "binary"
+        assert r.schema.b.numpy_dtype is np.bytes_
     streamed = stream_dataset(spark, url).isStreaming
     nations = _t(spark, sf_dir, "nation").count()
     print("RESULT", rows, batched, planned, streamed, nations)
@@ -283,7 +365,8 @@ def test_plain_spark_session_is_accepted(tmp_path, sf_dir):
     url = str(tmp_path / "store")
     os.makedirs(url)
     pq.write_table(
-        pa.table({"id": pa.array(range(30), pa.int64())}), f"{url}/part-0.parquet"
+        pa.table({"id": pa.array(range(30), pa.int64()), "b": [b"x"] * 30}),
+        f"{url}/part-0.parquet",
     )
     script = tmp_path / "external.py"
     script.write_text(_EXTERNAL)
