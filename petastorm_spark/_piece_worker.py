@@ -1,21 +1,17 @@
-"""Pure (JVM-free) row-group load + decode kernels, shared by the
-Reader's thread pool and the ``reader_pool_type='process'`` pool.
+"""JVM-free row-group load, decode and DNF-filter kernels: the pieces
+``reader._load_piece`` assembles into the one piece loader of every
+reader pool (thread, dummy, and spawned worker processes).
 
-Parity surface: petastorm/workers_pool/process_pool.py (process
-workers) and petastorm/py_dict_reader_worker.py:150-232 (row-group
-load, two-phase decode). Here the worker is a plain picklable function:
-multiprocessing 'spawn' children import only numpy/pandas/pyarrow and
-the pure-python schema module — no SparkSession is ever created in a
-worker.
-
-Schemas cross the process boundary as JSON strings (the sidecar
-format), never pickled objects, and are parsed once per worker via a
-keyed cache.
+Parity surface: petastorm/py_dict_reader_worker.py:150-232 (row-group
+load, two-phase decode) and the pyarrow-style ``filters`` of
+make_batch_reader. The kernels touch only numpy/pandas/pyarrow and the
+schema's fields; a spawned worker process still imports pyspark (the
+package ``__init__`` does), but never creates a SparkSession.
 """
 
 from __future__ import annotations
 
-import json
+import operator
 
 import numpy as np
 import pandas as pd
@@ -88,15 +84,16 @@ def load_table(
 
 
 def partition_values(
-    path: str, read_columns, present_columns, schema, missing_ok: bool = False
+    path: str, read_columns, present_columns, fields: dict, missing_ok: bool = False
 ) -> dict:
     """{column: typed scalar} for requested hive-partition columns not
-    stored in the file, recovered from the path with the schema's
-    partition-value typing. Raises KeyError for a requested column that
-    is neither in the file nor on the path (load_raw's contract) —
-    unless ``missing_ok`` (the schema-evolution read path), where the
-    column becomes a NULL constant: files written before a nullable
-    column was added simply have no values for it."""
+    stored in the file, recovered from the path and typed by the
+    column's field in ``fields`` (name -> UnischemaField of the FULL
+    schema, so a partition column outside the view is typed too).
+    Raises KeyError for a requested column that is neither in the file
+    nor on the path — unless ``missing_ok`` (the schema-evolution read
+    path), where the column becomes a NULL constant: files written
+    before a nullable column was added simply have no values for it."""
     parts: dict = {}
     present = set(present_columns)
     for c in read_columns:
@@ -106,7 +103,7 @@ def partition_values(
         if marker in path:
             val: object = path.split(marker, 1)[1].split("/", 1)[0]
             # honor Spark's partition-value type inference (pk=1 -> int)
-            field = schema.fields.get(c) if schema is not None else None
+            field = fields.get(c)
             if (
                 field is not None
                 and field.numpy_dtype is not None
@@ -195,7 +192,7 @@ def decode_col(
 
 
 def scalar_frame(table: pa.Table, parts: dict, names) -> pd.DataFrame:
-    """Undecode d pandas frame of the given (scalar) columns — the DNF
+    """Undecoded pandas frame of the given (scalar) columns — the DNF
     mask input. Partition columns come from ``parts`` as constants."""
     data = {}
     for c in names:
@@ -204,21 +201,6 @@ def scalar_frame(table: pa.Table, parts: dict, names) -> pd.DataFrame:
         else:
             data[c] = table.column(c).to_pandas()
     return pd.DataFrame(data)
-
-
-def load_raw(
-    fs, path: str, rg: int, sl: int, drop_parts: int, read_columns, schema
-) -> pd.DataFrame:
-    """Read one row group (optionally one strided slice of it) into a
-    pandas frame, recovering hive-partition columns from the path with
-    the schema's partition-value typing. (Compat surface — the reader
-    hot path now uses :func:`load_table` + :func:`decode_col`.)"""
-    table = load_table(fs, path, rg, sl, drop_parts, read_columns)
-    pdf = table.to_pandas()
-    parts = partition_values(path, read_columns, pdf.columns, schema)
-    for c, val in parts.items():
-        pdf[c] = val
-    return pdf
 
 
 # ---------------------------------------------------------------------------
@@ -254,29 +236,35 @@ def dnf_columns(filters) -> list[str]:
     return sorted({c for clause in dnf_clauses(filters) for c, _, _ in clause})
 
 
+_DNF_OPS = {
+    "=": operator.eq,
+    "==": operator.eq,
+    "!=": operator.ne,
+    "<": operator.lt,
+    "<=": operator.le,
+    ">": operator.gt,
+    ">=": operator.ge,
+    "in": lambda c, v: c.isin(list(v)),
+    "not in": lambda c, v: ~c.isin(list(v)),
+}
+
+
+def dnf_cond(c, op: str, val):
+    """``c op val`` for one DNF condition, on a pandas Series (the row
+    mask) or a Spark Column (the plan tier's filter)."""
+    if op not in _DNF_OPS:
+        raise ValueError(f"unsupported DNF filter op {op!r}")
+    return _DNF_OPS[op](c, val)
+
+
 def _cond_mask(pdf: pd.DataFrame, col: str, op: str, val) -> np.ndarray:
     s = pdf[col]
-    if op in ("=", "=="):
-        m = s == val
-    elif op == "!=":
+    m = dnf_cond(s, op, val)
+    if op in ("!=", "not in"):
         # SQL/pyarrow null semantics: NULL != x is NULL (dropped).  Plain
         # pandas `s != val` evaluates True for float NaN, which would make
         # the direct-stream tier keep rows the plan tier drops.
-        m = (s != val) & s.notna()
-    elif op == "<":
-        m = s < val
-    elif op == "<=":
-        m = s <= val
-    elif op == ">":
-        m = s > val
-    elif op == ">=":
-        m = s >= val
-    elif op == "in":
-        m = s.isin(list(val))
-    elif op == "not in":
-        m = ~s.isin(list(val)) & s.notna()
-    else:
-        raise ValueError(f"unsupported DNF filter op {op!r}")
+        m &= s.notna()
     return np.asarray(m.fillna(False), dtype=bool)
 
 
@@ -329,50 +317,4 @@ def rg_may_match(rg_meta, col_names: list[str], filters) -> bool:
     return any(
         all(cond_possible(*cond) for cond in clause)
         for clause in dnf_clauses(filters)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Process-pool entry point
-# ---------------------------------------------------------------------------
-
-_SCHEMA_CACHE: dict[str, object] = {}
-
-
-def _schema_from_json(js: str):
-    schema = _SCHEMA_CACHE.get(js)
-    if schema is None:
-        from petastorm_spark.unischema import Unischema
-
-        schema = Unischema.from_json(json.loads(js))
-        _SCHEMA_CACHE[js] = schema
-    return schema
-
-
-def process_piece(task: tuple) -> pd.DataFrame:
-    """Runs in a spawned worker process: load one row group and decode
-    ALL read columns (the GIL-bound codec work). Predicate, transform,
-    and row shuffle stay in the parent so closures never cross the
-    process boundary."""
-    (
-        fs, path, rg, sl, drop_parts, read_columns,
-        storage_js, full_js, dnf, missing_ok,
-    ) = task
-    storage = _schema_from_json(storage_js)
-    full = _schema_from_json(full_js)
-    table = load_table(fs, path, rg, sl, drop_parts, read_columns)
-    parts = partition_values(
-        path, read_columns, table.column_names, storage, missing_ok
-    )
-    sel = None
-    if dnf is not None:
-        mask = dnf_mask(
-            scalar_frame(table, parts, dnf_columns(dnf)), dnf
-        )
-        sel = np.nonzero(mask)[0]
-    names = list(table.column_names) + [
-        c for c in parts if c not in table.column_names
-    ]
-    return pd.DataFrame(
-        {c: decode_col(full.fields.get(c), table, parts, c, sel) for c in names}
     )

@@ -30,12 +30,16 @@ but with Spark doing the heavy lifting):
      pyarrow FileSystem handle (local, s3://, gs://, hdfs:// — the
      reference's fs_utils.py model): seeded piece-order shuffle per
      epoch (D2), shard selection ``index % shard_count == cur_shard``
-     (D1), DNF-filter row-group pruning from parquet statistics,
-     in-row-group row shuffle (D3), codec decode (C5) — in threads or
-     spawned worker processes — row predicate on decoded values
-     (P2/P3), TransformSpec (U1), then rows or column-vector batches
-     are yielded as namedtuples. Row-group counts come from the
-     metadata sidecar when present, so no footer is opened up front.
+     (D1), DNF-filter row-group pruning from parquet statistics. One
+     loader, :func:`_load_piece`, reads and decodes each piece under
+     every ``reader_pool_type`` (dummy, threads, or spawned worker
+     processes, fed a picklable :class:`_PieceSpec`): DNF row mask,
+     row predicate on decoded values (P2/P3), codec decode (C5). One
+     tail, ``Reader._finish``, then applies a predicate the workers
+     could not run, TransformSpec (U1) and the in-row-group row shuffle
+     (D3), and rows or column-vector batches are yielded as
+     namedtuples. Row-group counts come from the metadata sidecar when
+     present, so no footer is opened up front.
 
 At cluster scale the iteration tier runs on each training worker with
 a distinct ``cur_shard`` streaming its shard straight from the store —
@@ -46,11 +50,11 @@ normal Spark job sized by the cluster.
 from __future__ import annotations
 
 import functools
-import glob
 import json
 import os
 import shutil
 import tempfile
+from typing import NamedTuple
 from urllib.parse import urlparse
 
 import numpy as np
@@ -105,10 +109,6 @@ from petastorm_spark.unischema import Unischema
 def _strip_scheme(path: str) -> str:
     parsed = urlparse(path)
     return parsed.path if parsed.scheme else path
-
-
-def _is_null_scalar(v) -> bool:
-    return v is None or (isinstance(v, float) and np.isnan(v))
 
 
 def _resolve_fs(url: str) -> tuple[pafs.FileSystem, str] | None:
@@ -330,27 +330,12 @@ def _dnf_to_column(filters) -> Column:
     evaluates with pyarrow stats + pandas masks."""
     from functools import reduce
 
-    from petastorm_spark._piece_worker import dnf_clauses
+    from petastorm_spark._piece_worker import dnf_clauses, dnf_cond
 
     def cond(col: str, op: str, val) -> Column:
-        c = F.col(col)
-        if op in ("=", "=="):
-            return c == F.lit(val)
-        if op == "!=":
-            return c != F.lit(val)
-        if op == "<":
-            return c < F.lit(val)
-        if op == "<=":
-            return c <= F.lit(val)
-        if op == ">":
-            return c > F.lit(val)
-        if op == ">=":
-            return c >= F.lit(val)
-        if op == "in":
-            return c.isin(list(val))
-        if op == "not in":
-            return ~c.isin(list(val))
-        raise ValueError(f"unsupported DNF filter op {op!r}")
+        # a Column compares with a python scalar only through a literal
+        lit = val if op in ("in", "not in") else F.lit(val)
+        return dnf_cond(F.col(col), op, lit)
 
     clause_cols = [
         reduce(lambda a, b: a & b, [cond(*t) for t in clause])
@@ -439,21 +424,65 @@ def _enforce_cache_limit(cache_dir: str, limit_bytes: int, keep: str) -> None:
         )
 
 
-def _list_parquet_files(path: str) -> list[str]:
-    if os.path.isfile(path):
-        return [path]
-    def visible(f: str) -> bool:
-        # skip _metadata/_ps_index/.crc etc. at any directory level
-        rel = os.path.relpath(f, path)
-        return not any(part.startswith(("_", ".")) for part in rel.split(os.sep))
+class _PieceSpec(NamedTuple):
+    """What loading a piece needs besides its (path, row group, slice):
+    plain picklable values, so a process pool ships it as is."""
 
-    files = sorted(
-        f
-        for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        + glob.glob(os.path.join(path, "**", "part-*"), recursive=True)
-        if os.path.isfile(f) and visible(f)
+    fs: pafs.FileSystem
+    read_columns: list[str]
+    drop_parts: int
+    fields: dict  # read column -> its full-schema UnischemaField (or None)
+    decode: list[str]  # the view's columns, then the predicate's
+    dnf: list | None
+    missing_ok: bool  # schema evolution: an absent column reads as NULL
+
+
+def _load_piece(spec: _PieceSpec, path: str, rg: int, sl: int, predicate=None):
+    """One piece (a row group, or one strided slice of it) as a frame of
+    the decoded ``spec.decode`` columns of its surviving rows, or None
+    when no row survives. Every reader pool loads pieces here (reference
+    py_dict_reader_worker.py:150-232); a process pool's workers run it
+    without ``predicate`` and the parent applies that afterwards.
+
+    The piece stays an ARROW table until each column decodes: codec
+    payloads reach the codec as zero-copy memoryview slices of the arrow
+    data buffer instead of per-row python bytes via to_pandas (which was
+    ~30% of per-piece wall on the PNG bench)."""
+    table = load_table(
+        spec.fs, path, rg, sl, spec.drop_parts, spec.read_columns
     )
-    return sorted(set(files))
+    parts = partition_values(
+        path, spec.read_columns, table.column_names, spec.fields, spec.missing_ok
+    )
+    sel = None  # surviving row indices; None = all rows
+    if spec.dnf is not None:
+        m = dnf_mask(scalar_frame(table, parts, dnf_columns(spec.dnf)), spec.dnf)
+        if not m.any():
+            return None
+        sel = np.nonzero(m)[0]
+
+    # Two-phase decode (reference py_dict_reader_worker.py:222-232):
+    # 1. decode the PREDICATE columns, evaluate, filter;
+    # 2. decode the remaining columns for surviving rows only.
+    # The predicate therefore always sees decoded values (ndarrays,
+    # numpy-dtyped scalars), never np.save/compressed bytes.
+    done: dict[str, pd.Series] = {}
+    if predicate is not None:
+        for name in sorted(predicate.get_fields()):
+            done[name] = decode_col(spec.fields.get(name), table, parts, name, sel)
+        mask = np.asarray(predicate.do_include_pandas(pd.DataFrame(done)), dtype=bool)
+        if not mask.any():
+            return None
+        sel = (np.arange(len(table)) if sel is None else sel)[mask]
+        done = {n: s[mask].reset_index(drop=True) for n, s in done.items()}
+    return pd.DataFrame(
+        {
+            n: done[n]
+            if n in done
+            else decode_col(spec.fields.get(n), table, parts, n, sel)
+            for n in spec.decode
+        }
+    )
 
 
 class Reader:
@@ -793,20 +822,15 @@ class Reader:
             view = full_schema.create_schema_view(schema_fields)
         else:
             view = full_schema
-        self._storage_schema = view
-        self._full_schema = full_schema
-        # JSON forms cross the process-pool boundary (schemas hold
-        # dynamically-created namedtuple classes, so never pickled)
-        self._storage_json = json.dumps(view.to_json(), sort_keys=True)
-        self._full_json = json.dumps(full_schema.to_json(), sort_keys=True)
+        self._view_names = list(view.fields)
 
         # Final (post-transform) schema the consumer sees.
         self.schema = transform_schema(view, self._spec) if self._spec else view
 
         # Columns needed from storage: view + predicate + DNF filter columns.
         need = list(view.fields)
-        if predicate is not None:
-            need += [f for f in predicate.get_fields() if f not in need]
+        pred_cols = predicate.get_fields() if predicate is not None else set()
+        need += [f for f in pred_cols if f not in need]
         if self._dnf is not None:
             need += [c for c in dnf_columns(self._dnf) if c not in need]
         self._read_columns = need
@@ -820,6 +844,16 @@ class Reader:
             raise ValueError(
                 f"no parquet files found for {urls or 'dataframe'}"
             )
+        self._piece_spec = _PieceSpec(
+            self._fs,
+            need,
+            self._drop_parts,
+            {c: full_schema.fields.get(c) for c in need},
+            # not the DNF-only columns; the predicate's, for a process pool
+            [c for c in need if c in view.fields or c in pred_cols],
+            self._dnf,
+            self._schema_evolution,
+        )
 
         # ---- piece list (one per row group) --------------------------------
         if counts is None:
@@ -924,7 +958,7 @@ class Reader:
             # source files to stream, so a materialization is inherent.
             self._owned_cache = tempfile.mkdtemp(prefix="pstorm_cache_")
             self._require_plan().write.mode("overwrite").parquet(self._owned_cache)
-            return _list_parquet_files(self._owned_cache)
+            return _list_parquet_files_fs(self._fs, self._owned_cache)
         # user-managed cache dir: materialize into a managed
         # SUBDIRECTORY (an overwrite-write into the dir itself would
         # wipe unrelated user files), keyed by a STABLE content
@@ -949,10 +983,12 @@ class Reader:
         else:
             key = f"sess{self._require_plan().semanticHash() & 0xFFFFFFFF:08x}"
         managed = os.path.join(cache_dir, f"_ps_materialized_{key}")
-        existing = _list_parquet_files(managed) if os.path.isdir(managed) else []
+        existing = (
+            _list_parquet_files_fs(self._fs, managed) if os.path.isdir(managed) else []
+        )
         if not existing:
             self._require_plan().write.mode("overwrite").parquet(managed)
-            existing = _list_parquet_files(managed)
+            existing = _list_parquet_files_fs(self._fs, managed)
         else:
             os.utime(managed)  # refresh LRU rank on reuse
         # pin against concurrent eviction while this Reader is alive
@@ -1006,70 +1042,29 @@ class Reader:
     def _decode_piece(
         self, path: str, rg: int, sl: int = 0, rng: np.random.Generator | None = None
     ) -> pd.DataFrame | None:
-        # The piece stays an ARROW table until each column decodes:
-        # codec payloads reach the codec as zero-copy memoryview slices
-        # of the arrow data buffer instead of per-row python bytes via
-        # to_pandas (which was ~30% of per-piece wall on the PNG bench).
-        table = load_table(
-            self._fs, path, rg, sl, self._drop_parts, self._read_columns
+        return self._finish(
+            _load_piece(self._piece_spec, path, rg, sl, self._predicate), rng
         )
-        parts = partition_values(
-            path,
-            self._read_columns,
-            table.column_names,
-            self._storage_schema,
-            self._schema_evolution,
-        )
-        sel = None  # surviving row indices; None = all rows
-        if self._dnf is not None:
-            m = dnf_mask(
-                scalar_frame(table, parts, dnf_columns(self._dnf)), self._dnf
-            )
-            if not m.any():
-                return None
-            sel = np.nonzero(m)[0]
 
-        # Two-phase decode (reference py_dict_reader_worker.py:222-232):
-        # 1. decode the PREDICATE columns, evaluate, filter;
-        # 2. decode the remaining view columns for surviving rows only.
-        # The predicate therefore always sees decoded values (ndarrays,
-        # numpy-dtyped scalars), never np.save/compressed bytes.
-        done: dict[str, pd.Series] = {}
-        if self._predicate is not None:
-            pred_cols = sorted(self._predicate.get_fields())
-            for name in pred_cols:
-                field = self._full_schema.fields.get(name)
-                done[name] = decode_col(field, table, parts, name, sel)
-            mask = np.asarray(
-                self._predicate.do_include_pandas(pd.DataFrame(done)), dtype=bool
-            )
+    def _finish(self, pdf, rng, predicate=None) -> pd.DataFrame | None:
+        """The tail of every loaded piece: ``predicate`` if it is still
+        pending (a process pool's workers decode without it), then the
+        view projection, TransformSpec and in-piece row shuffle."""
+        if pdf is None or not len(pdf):
+            return None
+        if predicate is not None:
+            mask = np.asarray(predicate.do_include_pandas(pdf), dtype=bool)
             if not mask.any():
                 return None
-            sel = (np.arange(len(table)) if sel is None else sel)[mask]
-            done = {
-                n: s[mask].reset_index(drop=True)
-                for n, s in done.items()
-                if n in self._storage_schema.fields
-            }
-
-        # codec decode + dtype restore, view columns only
-        out = {}
-        for name, field in self._storage_schema.fields.items():
-            if name in done:
-                out[name] = done[name]
-            else:
-                out[name] = decode_col(field, table, parts, name, sel)
-        decoded = pd.DataFrame(out)
-
+            pdf = pdf[mask].reset_index(drop=True)
+        if list(pdf.columns) != self._view_names:
+            pdf = pdf[self._view_names]
         if self._spec is not None:
-            decoded = apply_transform_pandas(decoded, self._spec)
-
-        if self._shuffle_rows and len(decoded) > 1:
+            pdf = apply_transform_pandas(pdf, self._spec)
+        if self._shuffle_rows and len(pdf) > 1:
             rng = rng if rng is not None else self._rng
-            decoded = decoded.iloc[rng.permutation(len(decoded))].reset_index(
-                drop=True
-            )
-        return decoded
+            pdf = pdf.iloc[rng.permutation(len(pdf))].reset_index(drop=True)
+        return pdf
 
     def _batch_to_vectors(self, pdf: pd.DataFrame):
         vals = {}
@@ -1115,31 +1110,6 @@ class Reader:
             cols = [pdf[n] for n in self._nt._fields]
             yield from (self._nt(*vals) for vals in zip(*cols))
 
-    def _post_process(self, pdf, rng) -> pd.DataFrame | None:
-        """Parent-side tail of a process-pool piece: the worker already
-        decoded every read column, so the predicate sees decoded values
-        here too; then view projection, transform, row shuffle."""
-        if pdf is None or not len(pdf):
-            return None
-        if self._predicate is not None:
-            mask = np.asarray(self._predicate.do_include_pandas(pdf), dtype=bool)
-            if not mask.any():
-                return None
-            pdf = pdf[mask].reset_index(drop=True)
-        pdf = pdf[[n for n in self._storage_schema.fields]]
-        if self._spec is not None:
-            pdf = apply_transform_pandas(pdf, self._spec)
-        if self._shuffle_rows and len(pdf) > 1:
-            pdf = pdf.iloc[rng.permutation(len(pdf))].reset_index(drop=True)
-        return pdf
-
-    def _proc_task(self, path: str, rg: int, sl: int) -> tuple:
-        return (
-            self._fs, path, rg, sl, self._drop_parts, self._read_columns,
-            self._storage_json, self._full_json, self._dnf,
-            self._schema_evolution,
-        )
-
     def __iter__(self):
         self.last_row_consumed = False
         if self._managed_cache is not None:
@@ -1152,47 +1122,48 @@ class Reader:
                 os.utime(self._sentinel)
             except OSError:
                 pass
+        # Bounded prefetch: up to 2x workers pieces in flight, consumed
+        # in submission order (round-robin determinism, like the
+        # reference's thread pool result draining). Each window entry is
+        # a thunk returning the piece's finished frame.
+        from collections import deque
+        from concurrent.futures import ProcessPoolExecutor, ThreadPoolExecutor
+        from contextlib import nullcontext
+
+        depth = self._workers * 2
         if self._pool_type == "process":
-            # spawned workers do the GIL-bound IO + codec decode;
-            # closures (predicate/transform) never cross the boundary —
-            # they run parent-side on the decoded frames.
+            # spawned workers do the GIL-bound IO + codec decode; the
+            # predicate and transform closures stay in the parent
             import multiprocessing
-            from collections import deque
-            from concurrent.futures import ProcessPoolExecutor
 
-            from petastorm_spark._piece_worker import process_piece
+            pool = ProcessPoolExecutor(
+                self._workers, mp_context=multiprocessing.get_context("spawn")
+            )
 
-            ctx = multiprocessing.get_context("spawn")
-            with ProcessPoolExecutor(self._workers, mp_context=ctx) as pool:
-                window: deque = deque()
-                for path, rg, sl, rng in self._piece_stream():
-                    window.append(
-                        (pool.submit(process_piece, self._proc_task(path, rg, sl)), rng)
-                    )
-                    if len(window) >= self._workers * 2:
-                        fut, r = window.popleft()
-                        yield from self._emit(self._post_process(fut.result(), r))
-                while window:
-                    fut, r = window.popleft()
-                    yield from self._emit(self._post_process(fut.result(), r))
-        elif self._workers <= 1:
-            for piece in self._piece_stream():
-                yield from self._emit(self._decode_piece(*piece))
+            def submit(path, rg, sl, rng):
+                fut = pool.submit(_load_piece, self._piece_spec, path, rg, sl)
+                return lambda: self._finish(fut.result(), rng, self._predicate)
+
+        elif self._workers > 1:
+            pool = ThreadPoolExecutor(self._workers)
+
+            def submit(*piece):
+                return pool.submit(self._decode_piece, *piece).result
+
         else:
-            # bounded prefetch: up to 2x workers row groups in flight,
-            # consumed in submission order (round-robin determinism,
-            # like the reference's thread pool result draining)
-            from collections import deque
-            from concurrent.futures import ThreadPoolExecutor
+            pool, depth = nullcontext(), 1
 
-            with ThreadPoolExecutor(self._workers) as pool:
-                window: deque = deque()
-                for piece in self._piece_stream():
-                    window.append(pool.submit(self._decode_piece, *piece))
-                    if len(window) >= self._workers * 2:
-                        yield from self._emit(window.popleft().result())
-                while window:
-                    yield from self._emit(window.popleft().result())
+            def submit(*piece):
+                return lambda: self._decode_piece(*piece)
+
+        with pool:
+            window: deque = deque()
+            for piece in self._piece_stream():
+                window.append(submit(*piece))
+                if len(window) >= depth:
+                    yield from self._emit(window.popleft()())
+            while window:
+                yield from self._emit(window.popleft()())
         self.last_row_consumed = True
 
     # ---- lifecycle ---------------------------------------------------------

@@ -157,6 +157,32 @@ def test_reader_pool_matrix(spark, tmp_path_factory, pool):
     assert isinstance(rows[7], np.ndarray)
     np.testing.assert_array_equal(rows[7], np.full((4,), 7.0, dtype=np.float32))
 
+    # with a predicate, a DNF filter, a TransformSpec and a seeded row
+    # shuffle, every pool yields the synchronous pool's row sequence
+    from petastorm_spark.predicates import in_lambda
+    from petastorm_spark.transform import TransformSpec
+
+    def read(p):
+        with make_reader(
+            url,
+            spark=spark,
+            reader_pool_type=p,
+            workers_count=2,
+            predicate=in_lambda(
+                ["vec"], lambda c: np.array([v.sum() >= 20 for v in c["vec"]])
+            ),
+            filters=[("id", "<", 25)],
+            transform_spec=TransformSpec(lambda pdf: pdf.assign(id=pdf["id"] * 10)),
+            shuffle_rows=True,
+            seed=5,
+        ) as r:
+            return [(x.id, x.vec.tolist()) for x in r]
+
+    want = read("dummy")
+    assert sorted(i for i, _ in want) == [10 * i for i in range(5, 25)]
+    assert want != sorted(want)  # the rows really were shuffled
+    assert read(pool) == want
+
 
 def test_process_pool_with_predicate_and_shuffle(spark, tmp_path):
     from petastorm_spark.predicates import in_lambda
@@ -175,6 +201,41 @@ def test_process_pool_with_predicate_and_shuffle(spark, tmp_path):
     ) as r:
         got = sorted(x.id for x in r)
     assert got == list(range(10, 30))
+
+
+@pytest.mark.parametrize("by", ["filters", "predicate"])
+@pytest.mark.parametrize("pool", ["dummy", "thread", "process"])
+def test_hive_partition_filter_outside_view(spark, tmp_path, pool, by):
+    """A filter or predicate on a hive partition column that is not in
+    ``schema_fields`` sees the path value typed as the full schema types
+    it (``pk=1`` is the integer 1), so the iteration tier keeps the rows
+    the plan tier keeps."""
+    from petastorm_spark.predicates import in_lambda
+
+    url = str(tmp_path / "hive")
+    for pk in (1, 2):
+        os.makedirs(f"{url}/pk={pk}")
+        pq.write_table(
+            pa.table({"x": list(range(pk * 10, pk * 10 + 5))}),
+            f"{url}/pk={pk}/part-0.parquet",
+        )
+    kw = (
+        {"filters": [("pk", "=", 1)]}
+        if by == "filters"
+        else {"predicate": in_lambda(["pk"], lambda c: c["pk"] == 1)}
+    )
+    with make_reader(
+        url,
+        spark=spark,
+        schema_fields=["x"],
+        reader_pool_type=pool,
+        workers_count=2,
+        **kw,
+    ) as r:
+        got = sorted(row.x for row in r)
+        want = sorted(row.x for row in r.dataframe.filter("pk = 1").collect())
+    assert want == list(range(10, 15))
+    assert got == want
 
 
 # ---------------------------------------------------------------------------
